@@ -32,7 +32,7 @@ object Bench {
     // Warm the JVM/codegen/parquet-reader paths once so the first measured
     // query doesn't absorb ~4s of one-time startup cost. Best-effort: a
     // broken sf dir should still fall through to the per-query try/catch.
-    try spark.read.parquet(s"$sfDir/lineitem.parquet")
+    try Tables.readParquet(spark, s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().count()
     catch { case _: Throwable => () }
     // Then compile every query's plan shapes once against the smallest
@@ -65,6 +65,10 @@ object Bench {
     // identity. (Consecutive min-of-2 only defends against point spikes.)
     val names = selected.keys.toSeq
     val best = scala.collection.mutable.Map.empty[String, Double]
+    // queries that threw in any sweep: still timed (the min is unchanged),
+    // but listed by name in both result lines so a fast failure cannot
+    // pass as a fast query
+    val failed = scala.collection.mutable.SortedSet.empty[String]
     // Per-sweep wall-clock stamps: when a round's numbers drift uniformly,
     // these let the reader attribute it to a host-contention window (one
     // slow sweep, one normal) instead of re-litigating per-query deltas.
@@ -75,7 +79,7 @@ object Bench {
       for (name <- names) {
         val fn = selected(name)
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name }
         val dt = (System.nanoTime() - t0) / 1e9
         // Cleared after EVERY measurement, for two reasons: a later sweep
         // must not reuse an earlier sweep's persisted blocks (min-of-reps
@@ -93,7 +97,8 @@ object Bench {
     def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = names.map(k => s"\"" + k + "\":" + fmt(best(k))).mkString("{", ",", "}")
     val total = if (best.nonEmpty) best.values.sum else 0.0
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
     // Full per-query detail: one line on stdout AND a file, for humans and
     // local tooling.
     println(full)
@@ -117,6 +122,6 @@ object Bench {
     // per-query map stay visible from the artifact alone.
     val slowest = best.toSeq.sortBy { case (k, v) => (-v, k) }.take(20)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${best.size},"slowest":$slowest,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${best.size},"slowest":$slowest,"failed":$failedJson,"sf":"$sfDir"}""")
   }
 }

@@ -108,12 +108,15 @@ object Diag {
       clear()
       var best = Double.MaxValue
       var (bj, bs, bt, br, bw, bsp) = (0, 0, 0, 0L, 0L, 0L)
+      // "failed" when any rep threw: its time is still the min of reps,
+      // but must not read as a fast success
+      var status = "ok"
       for (rep <- 1 to reps) {
         jobs.set(0); stages.set(0); tasks.set(0)
         shR.set(0); shW.set(0); spillD.set(0)
         if (jobLogEnv) { println(s"  -- $name rep $rep"); jobLog.set(true) }
         val t0 = System.nanoTime()
-        try fn(spark, sfDir).count() catch { case _: Throwable => -1L }
+        try fn(spark, sfDir).count() catch { case _: Throwable => status = "failed" }
         val dt = (System.nanoTime() - t0) / 1e9
         jobLog.set(false)
         clear()
@@ -127,18 +130,18 @@ object Diag {
       }
       val line = f"$name%-28s ${best}%8.3f s  jobs=$bj%-3d stages=$bs%-3d " +
         f"tasks=$bt%-5d shufR=${br / 1024}%8d KiB shufW=${bw / 1024}%8d KiB " +
-        f"spill=${bsp / 1024}%d KiB"
+        f"spill=${bsp / 1024}%d KiB  $status"
       println(line)
-      (name, best, bj, bs, bt, br, bw)
+      (name, best, bj, bs, bt, br, bw, status)
     }
     val total = rows.map(_._2).sum
     println(f"TOTAL ${total}%.3f s over ${rows.size} queries")
     // machine-readable summary for diffing
     val pw = new java.io.PrintWriter(s"$outDir/diag_$suffix.tsv")
     try {
-      pw.println("query\tsec\tjobs\tstages\ttasks\tshuf_read\tshuf_write")
-      rows.foreach { case (n, t, j, s, k, r, w) =>
-        pw.println(f"$n\t$t%.3f\t$j\t$s\t$k\t$r\t$w")
+      pw.println("query\tsec\tjobs\tstages\ttasks\tshuf_read\tshuf_write\tstatus")
+      rows.foreach { case (n, t, j, s, k, r, w, st) =>
+        pw.println(f"$n\t$t%.3f\t$j\t$s\t$k\t$r\t$w\t$st")
       }
     } finally pw.close()
     spark.stop()

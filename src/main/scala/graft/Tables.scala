@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -9,7 +16,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
  * file per table under an sf directory. The Spark analogue of the reference's
  * information_schema introspection (`src/schema/schema-reader.ts:16-37`) —
  * parquet schemas are self-describing, so listing + `df.schema` replaces the
- * two metadata queries.
+ * two metadata queries. Each table's schema costs one footer read on the
+ * driver ([[readParquet]]) and no Spark job.
  */
 object Tables {
   /** All harness tables, sorted (the reference sorts by table_name). */
@@ -52,8 +60,71 @@ object Tables {
     // Kept for TIMESTAMP(NANOS)-era data, where the only readable form is a
     // raw nanos-long; a no-op for µs-typed data (normalizeTs handles those).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(raw) else raw
+  }
+
+  /**
+   * `spark.read.parquet(path)` without its schema-inference job. A bare
+   * parquet read runs a one-task Spark job to read one footer (Spark's
+   * `mergeSchemasInParallel`); here the driver reads that same footer —
+   * the file Spark's inference would pick — and converts it with the
+   * function that job runs, under the same session flags
+   * (`nanosAsLong`, binary-as-string, INT96, NTZ inference), then hands
+   * the schema to the reader. The resulting frame equals the plain read's,
+   * schema included (`ParquetReadSpec`).
+   *
+   * Every case inference would resolve differently goes to the plain read:
+   * a missing path or one without a visible data file (so Spark's own
+   * error surfaces), a directory with subdirectories (partition
+   * discovery), summary files (`_metadata`/`_common_metadata`, which
+   * inference reads first) and schema merging switched on.
+   */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val state = spark.sessionState
+    val c = state.conf
+    val hconf = state.newHadoopConf()
+    val source =
+      if (c.isParquetSchemaMergingEnabled) None else schemaSource(path, hconf)
+    source match {
+      case None => spark.read.parquet(path)
+      case Some(file) =>
+        val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hconf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        // the converter flags of ParquetFileFormat.mergeSchemasInParallel
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = c.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+          nanosAsLong = c.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            c.parquetReaderRespectUnknownTypeAnnotation)
+        spark.read
+          .schema(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+          .parquet(path)
+    }
+  }
+
+  /** The file whose footer Spark's inference reads for `path`: the path
+    * itself, or the first data file in sorted name order (names starting
+    * with `_` or `.`, and in-flight `._COPYING_` files, are not data).
+    * None sends the read to Spark's own path (see [[readParquet]]). */
+  private def schemaSource(path: String,
+      conf: Configuration): Option[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val st = try fs.getFileStatus(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    if (st.isFile) return Some(st)
+    val children = fs.listStatus(p)
+    def name(s: FileStatus) = s.getPath.getName
+    if (children.exists(s => s.isDirectory ||
+        name(s) == "_metadata" || name(s) == "_common_metadata")) None
+    else children.filterNot { s =>
+      name(s).startsWith("_") || name(s).startsWith(".") ||
+        name(s).endsWith("._COPYING_")
+    }.sortBy(name).headOption
   }
 
   /** Full catalog for a scale-factor directory. */
@@ -100,20 +171,17 @@ object Tables {
   /**
    * Catalog by directory listing — any `<table>.parquet` under `dir`, sorted
    * by name (the reference's information_schema scan orders by table_name,
-   * `schema-reader.ts:22`). Listing is driver-side metadata only.
+   * `schema-reader.ts:22`), each read by [[load]]: one directory listing
+   * plus one footer read per table on the driver, and no Spark job.
    */
   def catalogFromDir(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
     // ListMap keeps the sorted-name iteration order (a plain Map would
     // rehash it away)
     scala.collection.immutable.ListMap(
-      files.filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-        .map { f =>
-          val name = f.getName.stripSuffix(".parquet")
-          val raw = spark.read.parquet(f.getPath)
-          name -> (if (name == "events") normalizeTs(raw) else raw)
-        }
+      files.map(_.getName).filter(_.endsWith(".parquet")).sorted
+        .map(_.stripSuffix(".parquet"))
+        .map(name => name -> load(spark, dir, name))
         .toSeq: _*)
   }
 }

@@ -321,7 +321,7 @@ object Ann {
   /** Read the persisted planes in axis-major order; pdim × dim rows. */
   private def readProjection(spark: SparkSession, dir: String,
       pdim: Int, dim: Int): Seq[Seq[Double]] = {
-    val rows = spark.read.parquet(s"$dir/$ProjectionFile")
+    val rows = Tables.readParquet(spark, s"$dir/$ProjectionFile")
       .orderBy("axis", "pos").collect()
     require(rows.length == pdim * dim,
       s"$dir/$ProjectionFile has ${rows.length} rows, expected " +
@@ -369,7 +369,7 @@ object Ann {
       rot: Int): Seq[Array[Long]] =
     if (rot != 2 && rot != 3) Nil
     else {
-      val df = spark.read.parquet(s"$dir/$RotationFile")
+      val df = Tables.readParquet(spark, s"$dir/$RotationFile")
       if (!df.columns.contains("axis"))
         Seq(df.orderBy("pos").collect().map(_.getAs[Long]("u")))
       else df.orderBy("axis", "pos").collect()
@@ -546,7 +546,7 @@ object Ann {
         (!sq8 && !bq && !trained && projDim == 0 && !residual),
       "--flat stores the vectors themselves (no quantizer): it is " +
         "mutually exclusive with every quantizer flag")
-    val plain = spark.read.parquet(dataPath)
+    val plain = Tables.readParquet(spark, dataPath)
       .select(col(idCol), VectorOps.asDouble(col(vecCol)).as("emb"))
       .filter(col("emb").isNotNull && size(col("emb")) > 0)
       .withColumn("emb", requireDim(col("emb"), dim, "Ann --build"))
@@ -820,7 +820,7 @@ object Ann {
         qt = if (sq8) 1 else if (bq) 2 else if (projDim > 0) 3
           else if (residual) 4 else if (flat) 5 else 0,
         kjoin = kjoin, pdim = projDim))
-    spark.read.parquet(s"$outDir/codes.parquet")
+    Tables.readParquet(spark, s"$outDir/codes.parquet")
       .select(col(idCol)).distinct().count()
   }
 
@@ -833,7 +833,7 @@ object Ann {
       dataPath: String, vecCol: String): Long = {
     val meta = readMeta(indexDir)
     val fresh0 = toIndexSpaceFrame(
-      spark.read.parquet(dataPath)
+      Tables.readParquet(spark, dataPath)
         .select(col(meta.idCol), VectorOps.asDouble(col(vecCol)).as("__e"))
         .filter(col("__e").isNotNull && size(col("__e")) > 0)
         .withColumn("__e",
@@ -852,10 +852,10 @@ object Ann {
     // broadcast centroid frame, never a k×dim-literal plan
     val fresh = if (meta.kjoin)
       Ivf.assignJoin(fresh0, meta.idCol, "__e",
-          spark.read.parquet(s"$indexDir/centroids.parquet"))
+          Tables.readParquet(spark, s"$indexDir/centroids.parquet"))
         .withColumnRenamed("ivf_cell", "cell")
     else fresh0.withColumn("cell", Ivf.nearestCentroid(col("__e"),
-      spark.read.parquet(s"$indexDir/centroids.parquet")
+      Tables.readParquet(spark, s"$indexDir/centroids.parquet")
         .orderBy("cell").collect()
         .map(_.getSeq[Double](1).toSeq).toSeq))
     val codes = (if (meta.qt == 1) {
@@ -887,15 +887,15 @@ object Ann {
       // residual index: encode __e − c(cell) against the FROZEN
       // persisted codebook (the same frozen-quantizer contract as PQ;
       // the centroid value arrives via the kjoin-or-literal dual path)
-      val cb = spark.read.parquet(s"$indexDir/codebook.parquet")
+      val cb = Tables.readParquet(spark, s"$indexDir/codebook.parquet")
         .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
           col("cwn2").as("__cwn2"))
       val withCv = if (meta.kjoin)
         fresh.join(broadcast(
-          spark.read.parquet(s"$indexDir/centroids.parquet")
+          Tables.readParquet(spark, s"$indexDir/centroids.parquet")
             .select(col("cell"), col("vec").as("__cv"))), Seq("cell"))
       else fresh.withColumn("__cv", element_at(
-        typedlit(spark.read.parquet(s"$indexDir/centroids.parquet")
+        typedlit(Tables.readParquet(spark, s"$indexDir/centroids.parquet")
           .orderBy("cell").collect()
           .map(_.getSeq[Double](1).toArray).toSeq.toArray),
         col("cell") + 1))
@@ -906,7 +906,7 @@ object Ann {
         .select(col(meta.idCol), col("__cell").as("cell"),
           col("j").cast("long").as("j"), col("code"))
     } else {
-      val cbRows = spark.read.parquet(s"$indexDir/codebook.parquet")
+      val cbRows = Tables.readParquet(spark, s"$indexDir/codebook.parquet")
         .select(col("j"), col("c"), col("cw")).collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toSeq))
       val books: Seq[Seq[Seq[Double]]] = (0 until meta.m).map(j =>
@@ -923,7 +923,7 @@ object Ann {
   /** Read the persisted per-dim SQ8 scales in position order. */
   private def readScales(spark: SparkSession, dir: String,
       dim: Int): (Array[Long], Array[Long]) = {
-    val rows = spark.read.parquet(s"$dir/scales.parquet")
+    val rows = Tables.readParquet(spark, s"$dir/scales.parquet")
       .orderBy("pos").collect()
     require(rows.length == dim,
       s"$dir/scales.parquet has ${rows.length} rows, expected $dim")
@@ -948,7 +948,7 @@ object Ann {
       selfFilter: Boolean): DataFrame = {
     import graft.operators.Sq
     val (mnA, dA) = readScales(spark, indexDir, meta.dim)
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Tables.readParquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"),
         Sq.reconstruct(col("scode"), mnA, dA).as("__r"))
     val probes = probeCells(qs, "q_emb", centroids, centFrame, nprobe)
@@ -1029,7 +1029,7 @@ object Ann {
       meta: Meta, qs: DataFrame, qVec: String, storedCol: String,
       centroids: Seq[Seq[Double]], centFrame: Option[DataFrame],
       nprobe: Int, topK: Int, selfFilter: Boolean): DataFrame = {
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Tables.readParquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"), col(storedCol))
     val probes = probeCells(qs, qVec, centroids, centFrame, nprobe)
       .select(col("q_id"), col("__cell"), col(qVec))
@@ -1063,7 +1063,7 @@ object Ann {
       centFrame: Option[DataFrame], nprobe: Int, topK: Int,
       selfFilter: Boolean, asym: Boolean = false): DataFrame = {
     import graft.operators.Bq
-    val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+    val codes = Tables.readParquet(spark, s"$indexDir/codes.parquet")
       .select(col(meta.idCol), col("cell").as("__cell"), col("bcode"))
     // only the representation the chosen mode scores with is computed
     // and broadcast (packed words for Hamming, micro-ints for asym)
@@ -1104,14 +1104,14 @@ object Ann {
     // kjoin indexes never materialize the k×dim literal at serve time
     // either: the centroid FRAME flows into the broadcast probe ranking
     // ([[probeCells]]); small-k indexes keep the codegen'd literal list
-    val centDf = spark.read.parquet(s"$indexDir/centroids.parquet")
+    val centDf = Tables.readParquet(spark, s"$indexDir/centroids.parquet")
     val centFrame = if (meta.kjoin) Some(centDf) else None
     val centroids: Seq[Seq[Double]] = if (meta.kjoin) Nil
       else centDf.orderBy("cell").collect()
         .map(_.getSeq[Double](1).toSeq).toSeq
     val rotU = readRotation(spark, indexDir, meta.rot)
     val qs = toIndexSpaceFrame(
-      spark.read.parquet(queriesPath)
+      Tables.readParquet(spark, queriesPath)
         .select(col(qIdCol).as("q_id"),
           VectorOps.asDouble(col(qVecCol)).as("q_emb"))
         .filter(col("q_emb").isNotNull && size(col("q_emb")) > 0)
@@ -1130,10 +1130,10 @@ object Ann {
     else if (meta.qt == 5) flatServe(spark, indexDir, meta, qs,
       centroids, centFrame, nprobe, adcK, selfFilter)
     else {
-      val cb = spark.read.parquet(s"$indexDir/codebook.parquet")
+      val cb = Tables.readParquet(spark, s"$indexDir/codebook.parquet")
         .select(col("j"), col("c").as("__c"), col("cw").as("__cw"),
           col("cwn2").as("__cwn2"))
-      val codes = spark.read.parquet(s"$indexDir/codes.parquet")
+      val codes = Tables.readParquet(spark, s"$indexDir/codes.parquet")
         .select(col(meta.idCol), col("cell").as("__cell"), col("j"),
           col("code"))
       if (meta.qt == 4)
@@ -1156,7 +1156,7 @@ object Ann {
         // exact-cosine refine (DotProduct folds over min length) or
         // fail obscurely mid-rotation on a rotated index
         val raw = toIndexSpaceFrame(
-          spark.read.parquet(rawPath)
+          Tables.readParquet(spark, rawPath)
             .select(col(meta.idCol),
               VectorOps.asDouble(col(qVecCol)).as("__remb"))
             .filter(col("__remb").isNotNull && size(col("__remb")) > 0)

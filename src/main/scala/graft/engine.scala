@@ -127,9 +127,12 @@ object Engine {
 
   /**
    * Apply: write each transformed table as parquet under `outDir/<name>`.
-   * Row counts are read back from parquet footers (metadata-only scan) so the
-   * transform runs exactly once — no second pass over the data. No-op tables
-   * are not rewritten (reported 0, as the reference skips empty-SET tables).
+   * Row counts are read back from the written files, so the transform runs
+   * exactly once — no second pass over the data. The read-back costs one
+   * driver-side footer read for the schema ([[Tables.readParquet]], no
+   * inference job) and one count per table whose scan reads no column,
+   * only row-group metadata. No-op tables are not rewritten (reported 0,
+   * as the reference skips empty-SET tables).
    */
   def apply(plan: Plan, catalog: Map[String, DataFrame], outDir: String): Map[String, Long] =
     inParallel(plan.tables) { pt =>
@@ -139,7 +142,7 @@ object Engine {
         val out = df.select(compileTable(df, pt.columns): _*)
         val path = s"$outDir/${pt.table.replace('.', '_')}"
         out.write.mode("overwrite").parquet(path)
-        pt.table -> out.sparkSession.read.parquet(path).count()
+        pt.table -> Tables.readParquet(out.sparkSession, path).count()
       }
     }.toMap
 
@@ -198,8 +201,8 @@ object Engine {
     inParallel(plan.tables.filter(pt => !isNoop(dfFor(catalog, pt), pt.columns))) { pt =>
       val src = dfFor(catalog, pt)
       val cols = untouchedColumns(src, pt.columns)
-      val out = src.sparkSession.read
-        .parquet(s"$outDir/${pt.table.replace('.', '_')}")
+      val out = Tables.readParquet(src.sparkSession,
+        s"$outDir/${pt.table.replace('.', '_')}")
       def digest(df: DataFrame): String =
         graft.operators.Scale.tableChecksum(df, cols).head() match {
           case r => s"${r.get(0)}:${r.getLong(1)}"

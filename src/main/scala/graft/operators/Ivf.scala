@@ -182,7 +182,14 @@ object Ivf {
           .groupBy("__c", "__pos")
           .agg((sum(col("__v").cast("decimal(28,10)")).cast("double") /
             count(lit(1))).as("__m"))
-          .collect() // k × dim rows — centroid-matrix scale, not data scale
+          // Driver cost per Lloyd round: this aggregate's jobs plus a
+          // collect of k × dim (cell, pos, mean) rows, and the next
+          // round's plan re-binds all k × dim doubles as literals —
+          // `iters` rounds ship iters·k·dim values through the driver.
+          // Bounded by the callers' routing: Ann builds above k = 256
+          // (Ann.LargeKThreshold; 256 × dim 768 ≈ 197k rows a round) take
+          // [[trainJoin]], which keeps the centroids a k-row frame.
+          .collect()
         val byCluster = means.groupBy(_.getAs[Int]("__c"))
         centroids = centroids.indices.map { i =>
           byCluster.get(i) match {

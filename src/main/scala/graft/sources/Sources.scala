@@ -29,7 +29,7 @@ object Sources {
     * the harness `events` table. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(path)
+    graft.Tables.readParquet(spark, path)
   }
 
   /**
